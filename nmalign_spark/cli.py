@@ -14,7 +14,7 @@ Two execution modes:
 
 * default — run the kernel locally (the reference is a single-process tool;
   small lists don't need a cluster);
-* ``--spark`` — run the same lists through ``align_cogrouped`` on a local
+* ``--spark`` — run the same lists through ``align_segments`` on a local
   SparkSession: identical output (operators are bit-identical; see
   tests/test_cli.py), useful as a smoke of the cluster path.
 
@@ -56,7 +56,7 @@ def _build_parser() -> argparse.ArgumentParser:
     ap.add_argument("-S", "--separator", default="\t",
                     help="column separator (default: tab)")
     ap.add_argument("--spark", action="store_true",
-                    help="execute through the Spark cogroup operator")
+                    help="execute through the Spark align_segments operator")
     g1 = ap.add_mutually_exclusive_group(required=True)
     g1.add_argument("--strings1", nargs="+", help="list 1 as strings")
     g1.add_argument("--files1", nargs="+", help="list 1 as files of strings")
@@ -119,19 +119,17 @@ def _match_spark(l1, l2, normalization, cutoff, allow_splits):
     import numpy as np
     from pyspark.sql import SparkSession
 
-    from .operators.align import align_cogrouped
+    from .operators.align import align_segments
     spark = (SparkSession.builder.master("local[*]")
              .appName("nmalign-spark-cli")
              .config("spark.ui.enabled", "false").getOrCreate())
-    cand = spark.createDataFrame(
-        [("cli", i, s) for i, s in enumerate(l1)],
-        "url string, seq_no int, seg_text string")
-    refs = spark.createDataFrame(
-        [("cli", j, s) for j, s in enumerate(l2)],
-        "url string, seq_no int, seg_text string")
-    rows = align_cogrouped(cand, refs, normalization=normalization,
-                           cutoff=cutoff or None,
-                           try_subseg=allow_splits).collect()
+    segs = spark.createDataFrame(
+        [("cli", 1, i, s) for i, s in enumerate(l1)]
+        + [("cli", 2, j, s) for j, s in enumerate(l2)],
+        "url string, side int, seq_no int, seg_text string")
+    rows = align_segments(segs, normalization=normalization,
+                          cutoff=cutoff or None,
+                          try_subseg=allow_splits).collect()
     n = len(l1)
     idx = -1 * np.ones(n, dtype=int)
     beg = -1 * np.ones(n, dtype=int)

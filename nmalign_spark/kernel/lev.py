@@ -15,12 +15,14 @@ contract (uniform-cost Levenshtein; Indel = LCS-based distance; partial_ratio
 = best Indel window of the shorter string inside the longer) — no code is
 copied from any engine.
 
-Design notes (scale): the hot call is :func:`cdist_levenshtein` computing the
-full N×M similarity matrix of one document's line lists inside an Arrow
-batch.  The DP is vectorized with NumPy over a 3-D tensor
-``(N queries × M choices × max-choice-length)`` so the Python-level loop runs
-only ``max(len(query))`` times per document instead of ``N·M·len`` times.
-The horizontal DP dependency (``D[i][j] = min(..., D[i][j-1]+1)``) is solved
+Design notes (scale): the hot call is :func:`cdist_levenshtein` /
+:func:`cdist_levenshtein_many` computing the full N×M similarity matrix of
+one document's (or one batch of documents') line lists inside an Arrow
+batch; both run on the bit-parallel Myers/Hyyrö engine (kernel/myers.py).
+``partial_ratio`` windows take the bit-parallel LCS recurrence for needles
+up to 64 chars; longer needles fall back to a batched 3-D NumPy DP
+(:func:`_batched_dp`) over ``(N queries × M choices × max-choice-length)``,
+whose horizontal dependency (``D[i][j] = min(..., D[i][j-1]+1)``) is solved
 in closed form with a cumulative minimum::
 
     D[i][j] = j + cummin_k<=j ( E[k] - k )   where E = vertical/diagonal min

@@ -1,19 +1,21 @@
 """The core distributed operator: per-document forced fuzzy alignment.
 
 Spark mapping of SURVEY.md §2.3 J3-J6 + §2.10 U1: the reference's
-``match(l1, l2)`` (align.py:17-166) runs *inside* an Arrow-vectorized kernel,
-one document per group; everything around it is Catalyst-native.
+per-document ``match`` (align.py:17-166) runs *inside* an Arrow-vectorized
+kernel, one document per group; everything around it is Catalyst-native.
 
-Two entry points:
+Every entry point ends in :func:`align_lists_rows`, the one operator-level
+caller of ``match``:
 
 * :func:`align_pages` — hot path.  Input is the wide pages table (one row per
   url), so alignment is a **narrow** ``mapInPandas``: scan -> kernel -> rows,
   zero shuffles.  At 100 TB this is embarrassingly parallel; per-task cost is
   bounded by ``spark.sql.files.maxPartitionBytes``, and giant pages can be
-  isolated first via :func:`route_skew`.
+  split off first via :func:`route_skew` (operators/salt.py).
 * :func:`align_segments` — long-form input (url, side, seq_no, seg_text),
-  e.g. from external segmenters.  Needs one shuffle: ``groupBy(url).
-  applyInPandas``; AQE handles partition coalescing/skew splitting around it.
+  e.g. from external segmenters, or two tables (OCR vs ground truth) as one
+  side-tagged union.  Needs one shuffle on url; :func:`long_form_doc` turns a
+  url's rows into the kernel's lists (shared with streaming/stateful.py).
 
 Output schema (exploded assignment table, SURVEY.md §1.1):
 ``(url, i, j, line_no, beg, end, score, seg_text, extracted)`` where ``i``
@@ -36,8 +38,8 @@ from pyspark.sql import functions as F
 from ..kernel.assign import match
 from ..sources.segments import extract_segments, reference_lines
 
-__all__ = ["ALIGN_SCHEMA", "align_pages", "align_segments",
-           "align_cogrouped", "route_skew", "align_lists_rows"]
+__all__ = ["ALIGN_SCHEMA", "align_pages", "align_segments", "route_skew",
+           "align_lists_rows", "long_form_doc"]
 
 ALIGN_SCHEMA = ("url string, i int, j int, line_no int, beg int, end int, "
                 "score double, seg_text string, extracted string")
@@ -116,6 +118,12 @@ def _make_pages_kernel(normalization, cutoff, try_subseg, passthrough=()):
     return kernel
 
 
+def schema_with(ddl: str, df, passthrough) -> str:
+    """``ddl`` extended by ``df``'s ``passthrough`` columns and their types."""
+    return ", ".join([ddl] + [f"{c} {df.schema[c].dataType.simpleString()}"
+                              for c in passthrough])
+
+
 def align_pages(pages_df, normalization=None, cutoff=None, try_subseg=True,
                 passthrough=()):
     """pages (url, warc_ts, html, text, lang) -> alignment table.
@@ -128,31 +136,27 @@ def align_pages(pages_df, normalization=None, cutoff=None, try_subseg=True,
     kernel costs nothing and avoids a full-table join-back shuffle later.
     """
     passthrough = tuple(passthrough)
-    schema = ALIGN_SCHEMA
-    if passthrough:
-        by_name = {f.name: f for f in pages_df.schema.fields}
-        extra = ", ".join(f"{c} {by_name[c].dataType.simpleString()}"
-                          for c in passthrough)
-        schema = ALIGN_SCHEMA + ", " + extra
     return pages_df.select("url", "html", "text", *passthrough).mapInPandas(
         _make_pages_kernel(normalization, cutoff, try_subseg, passthrough),
-        schema=schema)
+        schema=schema_with(ALIGN_SCHEMA, pages_df, passthrough))
 
 
-def _group_to_doc(pdf: pd.DataFrame):
-    """One url's sorted segment rows -> (url, l1, l2, line_nos)."""
-    url = pdf["url"].iloc[0]
-    p1 = pdf[pdf["side"] == 1].sort_values("seq_no")
-    p2 = pdf[pdf["side"] == 2].sort_values("seq_no")
-    l1 = p1["seg_text"].tolist()
-    raw2 = p2["seg_text"].tolist()
-    # empty-line filter with index bookkeeping (ocrd/cli.py:219-226)
-    l2, line_nos = [], []
-    for no, line in zip(p2["seq_no"].tolist(), raw2):
-        if line and line.strip():
-            l2.append(line)
+def long_form_doc(sides, seq_nos, texts):
+    """One url's long-form rows -> (l1, l2, line_nos).
+
+    Rows are taken in (side, seq_no) order; a null text reads as "".  Side 2
+    goes through the empty-line filter with index bookkeeping
+    (ocrd/cli.py:219-226); other side values are ignored."""
+    l1, l2, line_nos = [], [], []
+    for side, no, text in sorted(zip(sides, seq_nos, texts),
+                                 key=lambda r: r[:2]):
+        text = "" if text is None else text
+        if side == 1:
+            l1.append(text)
+        elif side == 2 and text.strip():
+            l2.append(text)
             line_nos.append(no)
-    return url, l1, l2, line_nos
+    return l1, l2, line_nos
 
 
 def _make_segments_stream_kernel(normalization, cutoff, try_subseg):
@@ -169,8 +173,10 @@ def _make_segments_stream_kernel(normalization, cutoff, try_subseg):
         pending: pd.DataFrame | None = None
 
         def process(chunk: pd.DataFrame) -> pd.DataFrame:
-            docs = [_group_to_doc(g)
-                    for _, g in chunk.groupby("url", sort=False)]
+            docs = [(url, *long_form_doc(g["side"].tolist(),
+                                         g["seq_no"].tolist(),
+                                         g["seg_text"].tolist()))
+                    for url, g in chunk.groupby("url", sort=False)]
             per_doc = _batched_doc_rows(docs, normalization, cutoff,
                                         try_subseg)
             rows = [r for page_rows in per_doc for r in page_rows]
@@ -191,7 +197,7 @@ def _make_segments_stream_kernel(normalization, cutoff, try_subseg):
 
 
 def align_segments(segments_df, normalization=None, cutoff=None,
-                   try_subseg=True, parallelism: int | None = None):
+                   try_subseg=True):
     """Long-form segments (url, side, seq_no, seg_text) -> alignment table.
 
     One hash shuffle on url + in-partition sort; the kernel is a streaming
@@ -205,9 +211,11 @@ def align_segments(segments_df, normalization=None, cutoff=None,
     AQE folded the whole corpus into one partition and serialized the entire
     alignment onto one core (16.7 s vs 1.5 s).  Compute-bound Python stages
     must size partitions by CPU, not bytes.
+
+    Two separate tables (OCR vs ground truth) align as one side-tagged
+    union, e.g. ``cand.withColumn("side", F.lit(1)).unionByName(refs...)``.
     """
-    spark = segments_df.sparkSession
-    n = parallelism or spark.sparkContext.defaultParallelism * 4
+    n = segments_df.sparkSession.sparkContext.defaultParallelism * 4
     parts = segments_df.repartition(n, "url") \
         .sortWithinPartitions("url", "side", "seq_no")
     return parts.mapInPandas(
@@ -215,51 +223,15 @@ def align_segments(segments_df, normalization=None, cutoff=None,
         schema=ALIGN_SCHEMA)
 
 
-def _make_cogroup_kernel(normalization, cutoff, try_subseg):
-    def kernel(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        url = (left["url"].iloc[0] if len(left) else right["url"].iloc[0])
-        l1 = left.sort_values("seq_no")["seg_text"].tolist()
-        l2, line_nos = [], []
-        for no, line in zip(right.sort_values("seq_no")["seq_no"],
-                            right.sort_values("seq_no")["seg_text"]):
-            if line and line.strip():
-                l2.append(line)
-                line_nos.append(int(no))
-        rows = align_lists_rows(url, l1, l2, line_nos,
-                                normalization, cutoff, try_subseg)
-        return pd.DataFrame(rows, columns=_COLS)
-    return kernel
-
-
-def align_cogrouped(candidates_df, references_df, normalization=None,
-                    cutoff=None, try_subseg=True):
-    """Two-table input shape: candidates (url, seq_no, seg_text) cogrouped
-    with references (url, seq_no, seg_text) — ``cogroup().applyInPandas``
-    keyed by url (north_star: "per-url alignment runs as cogrouped Arrow
-    batches").
-
-    Prefer :func:`align_segments` for massive corpora of small documents
-    (its streaming kernel amortizes per-group overhead); the cogroup form is
-    the natural fit when the two sides genuinely live in different tables
-    (e.g. OCR output vs ground-truth collections) and groups are
-    fewer/larger.  Output identical to the other paths on the same lists
-    (tests/test_align_spark.py)."""
-    return candidates_df.groupBy("url").cogroup(
-        references_df.groupBy("url")).applyInPandas(
-        _make_cogroup_kernel(normalization, cutoff, try_subseg),
-        schema=ALIGN_SCHEMA)
-
-
-def route_skew(pages_df, giant_chars: int = 20_000, giant_parts: int = 64):
+def route_skew(pages_df, giant_chars: int = 20_000):
     """Split pages into (normal, giant) DataFrames by kernel-cost proxy.
 
     The alignment kernel is O(N·M·L) per url (SURVEY.md §4 custom-work #1):
     one giant page can dominate a task.  Cost proxy = length(text) (N·M grows
     quadratically with it, so a char threshold is a stable cost threshold).
-    Callers union the two aligned outputs; the giant branch gets spread
-    round-robin over ``giant_parts`` partitions so each giant lands alone.
+    Callers union the two aligned outputs; the giant branch is spread over
+    tasks by the salted path's own chunk shuffle (operators/salt.py).
     """
     cost = F.length(F.col("text"))
-    normal = pages_df.where(cost < giant_chars)
-    giants = pages_df.where(cost >= giant_chars).repartition(giant_parts)
-    return normal, giants
+    return (pages_df.where(cost < giant_chars),
+            pages_df.where(cost >= giant_chars))

@@ -545,9 +545,9 @@ FROM ordered
 def k2_pagexml_merge(spark, sf_dir):
     """K2 fidelity end-to-end: deterministic PAGE-XML pages (flat lines
     with @conf + a junk second TextEquiv) are segmented, force-aligned by
-    the REAL cogrouped kernel against marker-provable identical reference
-    lines (the u1 identity construction, so j = i and score = 1.0 are
-    SQL-derivable), merged back into the XML
+    the REAL ``align_segments`` kernel against marker-provable identical
+    reference lines (the u1 identity construction, so j = i and score = 1.0
+    are SQL-derivable), merged back into the XML
     (sinks/pagexml_merge.py — reference ocrd/cli.py:240-290), reserialized
     and reparsed.  The oracle reconstructs every TextEquiv of every line:
     the inserted @index=0 (conf=score, dataType=other,
@@ -558,7 +558,7 @@ def k2_pagexml_merge(spark, sf_dir):
     separately by ``a4_hierarchy_rollup``)."""
     import pandas as pd
 
-    from ..operators.align import align_cogrouped
+    from ..operators.align import align_segments
     from ..sinks.pagexml_merge import merge_pages_df, parse_line_equivs
     from ..sources.pagexml import make_page_xml, pagexml_segments_df
 
@@ -579,13 +579,10 @@ def k2_pagexml_merge(spark, sf_dir):
             yield pd.DataFrame(rows, columns=["url", "xml"])
 
     pages = docs.mapInPandas(gen, schema="url string, xml binary")
-    cand = pagexml_segments_df(pages, side=1) \
-        .select("url", "seq_no", "seg_text")
-    # a DISTINCT plan for the reference side: cogrouping a frame with
-    # itself dedupes the attribute set and the right group loses its columns
-    ref = pagexml_segments_df(pages, side=2) \
-        .select("url", "seq_no", "seg_text")
-    aligned = align_cogrouped(cand, ref, try_subseg=True)
+    segs = pagexml_segments_df(pages, side=1).unionByName(
+        pagexml_segments_df(pages, side=2)) \
+        .select("url", "side", "seq_no", "seg_text")
+    aligned = align_segments(segs, try_subseg=True)
     merged = merge_pages_df(pages, aligned, other_grp="GT")
 
     def parse_back(batches):

@@ -18,13 +18,14 @@ pair (kernel/lev.py:198-222).  So the salted path:
    scores its chunk against full l2 with the SAME ``cdist_levenshtein`` the
    unsalted kernel uses, emitting the chunk's float32 rows as one binary cell
    (Arrow-friendly; no per-value Python).
-3. **assemble** (``groupBy(url).applyInPandas``): order chunks, stack the
-   matrix, run the sequential assignment once with the matrix injected
-   (``match(..., dist=...)``).  Output is **bit-identical** to the unsalted
-   path — verified by tests/test_salt.py equality against ``align_pages``.
+3. **assemble** (``groupBy(page_uid).applyInPandas``): order chunks, stack
+   the matrix, run the sequential assignment once with the matrix injected
+   (``align_lists_rows(..., dist=...)``).  Output is **bit-identical** to the
+   unsalted path — verified by tests/test_salt.py equality against
+   ``align_pages``.
 
 Scale notes (100 TB): only pages routed giant by the O(len(text)) cost proxy
-(route_skew, operators/align.py:147-159) pay the two extra shuffles; the
+(route_skew, operators/align.py) pay the two extra shuffles; the
 shuffle volume per giant is N×M×4 bytes of matrix + chunked strings, bounded
 by chunking only truly-giant pages (the normal path stays shuffle-free).  AQE
 handles residual imbalance among chunks.  ``chunk_rows`` bounds per-task
@@ -40,10 +41,10 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from ..functions.normalize import make_preprocessor
-from ..kernel.assign import match
 from ..kernel.lev import cdist_levenshtein
 from ..sources.segments import extract_segments, reference_lines
-from .align import ALIGN_SCHEMA, _COLS, align_lists_rows, align_pages, route_skew
+from .align import (ALIGN_SCHEMA, _COLS, align_lists_rows, align_pages,
+                    route_skew, schema_with)
 
 __all__ = ["align_pages_salted", "salted_align"]
 
@@ -103,42 +104,22 @@ def _make_assembler(normalization, cutoff, try_subseg, passthrough=()):
         url = pdf["url"].iloc[0]
         extras = tuple(pdf[c].iloc[0] for c in passthrough)
         l2 = list(pdf["l2"].iloc[0])
-        line_nos = [int(x) for x in pdf["line_nos"].iloc[0]]
+        line_nos = pdf["line_nos"].iloc[0]
         l1 = [s for chunk in pdf["l1_chunk"] for s in chunk]
-        cols = _COLS + list(passthrough)
-        if not l1 or not l2:
-            rows = align_lists_rows(url, l1, l2, line_nos,
-                                    normalization, cutoff, try_subseg)
-            return pd.DataFrame([r + extras for r in rows], columns=cols)
-        dist = np.vstack([
-            np.frombuffer(b, dtype=np.float32).reshape(-1, len(l2))
-            for b in pdf["sim"]])
-        result, scores = match(l1, l2, normalization=normalization,
-                               cutoff=cutoff, try_subseg=try_subseg,
-                               dist=dist)
-        if try_subseg:
-            idx, beg, end = result
-        else:
-            idx = result
-            beg = end = np.full_like(idx, -1)
-        rows = []
-        for i, seg in enumerate(l1):
-            j = int(idx[i])
-            if j < 0:
-                rows.append((url, i, -1, -1, -1, -1, 0.0, seg, None) + extras)
-                continue
-            line = l2[j]
-            b, e = int(beg[i]), int(end[i])
-            extracted = line[b:e] if b >= 0 else line
-            rows.append((url, i, j, line_nos[j], b, e, float(scores[i]),
-                         seg, extracted) + extras)
-        return pd.DataFrame(rows, columns=cols)
+        dist = None
+        if l1 and l2:
+            dist = np.vstack([
+                np.frombuffer(b, dtype=np.float32).reshape(-1, len(l2))
+                for b in pdf["sim"]])
+        rows = align_lists_rows(url, l1, l2, line_nos, normalization, cutoff,
+                                try_subseg, dist=dist)
+        return pd.DataFrame([r + extras for r in rows],
+                            columns=_COLS + list(passthrough))
     return assemble
 
 
 def salted_align(giant_pages_df, normalization=None, cutoff=None,
-                 try_subseg=True, chunk_rows: int = 256,
-                 parallelism: int | None = None, passthrough=()):
+                 try_subseg=True, chunk_rows: int = 256, passthrough=()):
     """Giant pages -> alignment table via chunked parallel matrix scoring.
 
     Chunks are keyed by a per-ROW ``page_uid`` (``monotonically_increasing_
@@ -158,16 +139,8 @@ def salted_align(giant_pages_df, normalization=None, cutoff=None,
     would fold the chunks back onto few cores and defeat the salting (same
     trap as align_segments; measured there: 16.7 s vs 1.5 s)."""
     passthrough = tuple(passthrough)
-    spark = giant_pages_df.sparkSession
-    n = parallelism or spark.sparkContext.defaultParallelism * 4
-    chunk_schema = _CHUNK_SCHEMA
-    out_schema = ALIGN_SCHEMA
-    if passthrough:
-        by_name = {f.name: f for f in giant_pages_df.schema.fields}
-        extra = ", ".join(f"{c} {by_name[c].dataType.simpleString()}"
-                          for c in passthrough)
-        chunk_schema = _CHUNK_SCHEMA + ", " + extra
-        out_schema = ALIGN_SCHEMA + ", " + extra
+    n = giant_pages_df.sparkSession.sparkContext.defaultParallelism * 4
+    chunk_schema = schema_with(_CHUNK_SCHEMA, giant_pages_df, passthrough)
     pages = giant_pages_df.select("url", "html", "text", *passthrough) \
         .withColumn("page_uid", F.monotonically_increasing_id())
     chunks = pages.mapInPandas(
@@ -177,19 +150,21 @@ def salted_align(giant_pages_df, normalization=None, cutoff=None,
         schema=chunk_schema + _SCORED_SUFFIX)
     return scored.groupBy("page_uid").applyInPandas(
         _make_assembler(normalization, cutoff, try_subseg, passthrough),
-        schema=out_schema)
+        schema=schema_with(ALIGN_SCHEMA, giant_pages_df, passthrough))
 
 
 def align_pages_salted(pages_df, normalization=None, cutoff=None,
                        try_subseg=True, giant_chars: int = 20_000,
-                       chunk_rows: int = 256):
+                       chunk_rows: int = 256, passthrough=()):
     """Production entry: normal pages on the shuffle-free narrow path,
     giants (cost proxy >= ``giant_chars`` chars of text) on the salted path;
     union of the two is the complete alignment table, bit-identical to
-    running ``align_pages`` on everything."""
+    running ``align_pages`` on everything.  ``passthrough`` columns ride
+    through both halves (see :func:`align_pages`)."""
     normal, giants = route_skew(pages_df, giant_chars=giant_chars)
     fast = align_pages(normal, normalization=normalization, cutoff=cutoff,
-                       try_subseg=try_subseg)
+                       try_subseg=try_subseg, passthrough=passthrough)
     slow = salted_align(giants, normalization=normalization, cutoff=cutoff,
-                        try_subseg=try_subseg, chunk_rows=chunk_rows)
+                        try_subseg=try_subseg, chunk_rows=chunk_rows,
+                        passthrough=passthrough)
     return fast.unionByName(slow)

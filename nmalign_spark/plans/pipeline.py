@@ -22,10 +22,12 @@ Scale design (BASELINE.json north_rule / SURVEY.md §7 step 7):
 * **Lineage + metrics** — per (run_id, crawl_date, bucket): row counts,
   match counts, mean score, appended to ``_lineage`` (the reference's shared
   stats dict, ocrd/cli.py:111-118, as a table).
-* **No driver-side loops** — every step is a DataFrame op; the only shuffle
-  in the whole job is the tiny lineage aggregation (alignment itself is a
-  narrow mapInPandas; the resume anti-join broadcasts the committed-url set
-  when small, else AQE picks a shuffle join).
+* **No driver-side loops** — every step is a DataFrame op.  Normal pages
+  align in a narrow mapInPandas with no shuffle; the shuffles are the
+  salted branch's two (chunk spread, matrix reassembly — empty when no page
+  is giant), the resume anti-join (a broadcast of the committed-url set
+  when small, else an AQE-picked shuffle join) and the tiny lineage
+  aggregation.
 """
 
 from __future__ import annotations
@@ -33,42 +35,49 @@ from __future__ import annotations
 import time
 import uuid
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from ..functions.normalize import DEFAULT_NORMALIZATION
-from ..operators.align import align_pages, route_skew
 from ..operators.assemble import assemble_pages
-from ..operators.salt import salted_align
+from ..operators.salt import align_pages_salted
 
-__all__ = ["ExtractionPipeline"]
+__all__ = ["ExtractionPipeline", "read_committed"]
+
+
+def read_committed(spark, path: str):
+    """Read a committed table; None ONLY when it does not exist yet.
+
+    Any other failure (corrupt file, permission, transient FS error)
+    re-raises: treating it as "first run" would skip the resume anti-join
+    and re-append the whole batch — silent duplication in a pipeline whose
+    contract is idempotent resume.  Matches the error condition, not the
+    message text."""
+    try:
+        return spark.read.parquet(path)
+    except AnalysisException as e:
+        if e.getCondition() == "PATH_NOT_FOUND":
+            return None
+        raise
 
 
 class ExtractionPipeline:
     def __init__(self, output_dir: str, normalization=None, cutoff=None,
                  try_subseg: bool = True, n_buckets: int = 16,
-                 giant_chars: int = 20_000, giant_parts: int = 64):
+                 giant_chars: int = 20_000):
         self.output_dir = output_dir.rstrip("/")
         self.normalization = DEFAULT_NORMALIZATION if normalization is None else normalization
         self.cutoff = cutoff
         self.try_subseg = try_subseg
         self.n_buckets = n_buckets
         self.giant_chars = giant_chars
-        self.giant_parts = giant_parts
 
     # -- helpers ------------------------------------------------------------
 
     def _committed_urls(self, spark):
-        """Distinct urls already in the output (empty DF if first run)."""
-        try:
-            return (spark.read.parquet(f"{self.output_dir}/aligned")
-                    .select("url").distinct())
-        except Exception:
-            return None
-
-    def _align(self, pages):
-        return align_pages(pages, normalization=self.normalization,
-                           cutoff=self.cutoff, try_subseg=self.try_subseg,
-                           passthrough=("warc_ts", "lang"))
+        """Distinct urls already in the output (None on the first run)."""
+        done = read_committed(spark, f"{self.output_dir}/aligned")
+        return None if done is None else done.select("url").distinct()
 
     def _write(self, df, subdir: str, partition_cols=()):
         w = df.write.mode("append")
@@ -92,15 +101,13 @@ class ExtractionPipeline:
             n_before = pages.count()
             pages = pages.join(done, "url", "left_anti")
             n_skipped = n_before - pages.count()
-        normal, giants = route_skew(pages, self.giant_chars, self.giant_parts)
-        fast = self._align(normal)
-        # giants: matrix-chunk salting; warc_ts/lang ride through the salted
-        # path as passthrough columns — a join-back by url would fan out
-        # duplicate-url rows (re-crawled pages) and double-count them
-        slow = salted_align(giants, normalization=self.normalization,
-                            cutoff=self.cutoff, try_subseg=self.try_subseg,
-                            passthrough=("warc_ts", "lang"))
-        aligned = fast.unionByName(slow.select(*fast.columns))
+        # warc_ts/lang ride through both branches as passthrough columns —
+        # a join-back by url would fan out duplicate-url rows (re-crawled
+        # pages) and double-count them
+        aligned = align_pages_salted(
+            pages, normalization=self.normalization, cutoff=self.cutoff,
+            try_subseg=self.try_subseg, giant_chars=self.giant_chars,
+            passthrough=("warc_ts", "lang"))
         out = (aligned
                .withColumn("crawl_date", F.to_date("warc_ts"))
                .withColumn("bucket", F.pmod(F.xxhash64("url"),

@@ -1,6 +1,6 @@
 """The ``ocrd-nmalign-merge`` production flow over METS workspaces, end to
 end on Spark: METS scan -> zip_input_files pairing -> distributed file
-reads -> PAGE-XML / plaintext extraction -> cogrouped alignment -> PAGE-XML
+reads -> PAGE-XML / plaintext extraction -> alignment -> PAGE-XML
 merge-back -> workspace export with an updated METS.
 
 Reference surface: /root/reference/nmalign/ocrd/cli.py (the processor's
@@ -16,11 +16,12 @@ PHYS_0001 everywhere) never collide.
 
 Scale shape: two narrow ``mapInPandas`` parses (METS, PAGE) + one
 ``binaryFile`` scan joined by (workspace, href) + one grouped sort for
-multi-file plaintext partners + the cogrouped align kernel + the merge
-kernel — the only shuffles are the pairing aggregation, the href join, and
-the alignment cogroup, all on near-uniform keys.  The per-workspace METS
-rewrite at export is a tiny serial commit per workspace (the METS is one
-shared XML document — same split as the reference's METS server).
+multi-file plaintext partners + ``align_segments`` over the side-tagged
+union of both sides + the merge kernel — the only shuffles are the pairing
+aggregation, the href join, and the alignment's url shuffle, all on
+near-uniform keys.  The per-workspace METS rewrite at export is a tiny
+serial commit per workspace (the METS is one shared XML document — same
+split as the reference's METS server).
 """
 
 from __future__ import annotations
@@ -30,7 +31,7 @@ from pathlib import Path
 
 from pyspark.sql import functions as F
 
-from ..operators.align import align_cogrouped
+from ..operators.align import align_segments
 from ..sinks.pagexml_merge import merge_pages_df
 from ..sources.mets import (MIMETYPE_PAGE, mets_files_df, mets_workspaces_df,
                             zip_workspace_files)
@@ -102,7 +103,7 @@ def _align(ws, blobs, input_grp: str, other_grp: str, normalization=None,
                 .drop("content"))
 
     cand = pagexml_segments_df(page_xml, side=1) \
-        .select("url", "seq_no", "seg_text")
+        .select("url", "side", "seq_no", "seg_text")
 
     # other side: one row per partner file, in sorted-href order (k), then
     # a per-page pass enumerates lines across files (ocrd/cli.py:209-215:
@@ -140,9 +141,10 @@ def _align(ws, blobs, input_grp: str, other_grp: str, normalization=None,
         extract, schema="url string, seq_no int, seg_text string, "
                         "line_id string")
 
-    aligned = align_cogrouped(cand, refs.select("url", "seq_no", "seg_text"),
-                              normalization=normalization, cutoff=cutoff,
-                              try_subseg=try_subseg)
+    segs = cand.unionByName(refs.select("url", F.lit(2).alias("side"),
+                                        "seq_no", "seg_text"))
+    aligned = align_segments(segs, normalization=normalization,
+                             cutoff=cutoff, try_subseg=try_subseg)
     merged = merge_pages_df(
         page_xml.select("url", "xml"), aligned,
         other_grp=other_grp,

@@ -111,7 +111,7 @@ def pagexml_segments_df(pages_df, side: int = 2, xml_col: str = "xml",
 
     Note: the whitespace-only-line filter is NOT applied here — it belongs
     to the aligner (ocrd/cli.py:219-226 drops empty l2 lines with index
-    bookkeeping, which ``align_segments``/``align_cogrouped`` already do),
+    bookkeeping, which ``align_segments`` already does),
     so this source stays a faithful 1:1 projection of the document.
     """
     import pandas as pd

@@ -3,8 +3,8 @@
 The reference is strictly batch (SURVEY.md §2.9); this is the engine's
 additional continuous-ingestion surface: new crawl files landing in a
 directory (or an Iceberg table's appends) flow through the SAME narrow
-align kernel — ``mapInPandas`` is fully streaming-compatible because the
-hot path is stateless per page (no shuffle, no aggregation state).
+``align_pages`` plan — ``mapInPandas`` is fully streaming-compatible because
+the hot path is stateless per page (no shuffle, no aggregation state).
 
 Semantics: append-mode, exactly-once per file via the checkpoint; the batch
 twin (`align_pages` on the same directory) produces the identical row set,
@@ -16,7 +16,7 @@ pipeline (plans/pipeline.py).
 
 from __future__ import annotations
 
-from ..operators.align import ALIGN_SCHEMA, _make_pages_kernel
+from ..operators.align import align_pages
 
 PAGES_DDL = ("url string, warc_ts timestamp, html binary, "
              "text string, lang string")
@@ -32,10 +32,8 @@ def stream_align_pages(spark, src_dir: str, normalization=None, cutoff=None,
     reader = spark.readStream.schema(PAGES_DDL)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    pages = reader.parquet(src_dir)
-    return pages.select("url", "html", "text").mapInPandas(
-        _make_pages_kernel(normalization, cutoff, try_subseg, ()),
-        schema=ALIGN_SCHEMA)
+    return align_pages(reader.parquet(src_dir), normalization=normalization,
+                       cutoff=cutoff, try_subseg=try_subseg)
 
 
 DOCS_DDL = ("doc_id long, text string, lang string, source string, "

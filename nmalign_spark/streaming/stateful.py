@@ -20,7 +20,8 @@ url, when the url's stream is complete:
   no pickled Python objects.
 
 Output rows are identical to the batch ``align_segments`` on the same
-union of rows (tests/test_streaming_stateful.py drains two micro-batches
+union of rows, null texts included: both build a url's lists with the same
+``long_form_doc`` (tests/test_streaming_stateful.py drains two micro-batches
 with the sides split across them and asserts equality).  Source-layout
 gotcha: the parquet file source does NOT recurse into arbitrary
 subdirectories — stage files flat in ``src_dir`` or in ``key=value``
@@ -33,7 +34,8 @@ from __future__ import annotations
 
 import pandas as pd
 
-from ..operators.align import ALIGN_SCHEMA, _COLS, align_lists_rows
+from ..operators.align import (ALIGN_SCHEMA, _COLS, align_lists_rows,
+                               long_form_doc)
 
 SEGMENTS_TS_DDL = "url string, side int, seq_no int, seg_text string"
 _STATE_DDL = "sides array<int>, seqs array<int>, texts array<string>"
@@ -50,7 +52,7 @@ def _make_stateful_kernel(normalization, cutoff, try_subseg, stale_ms: int):
             return
         sides: list[int] = []
         seqs: list[int] = []
-        texts: list[str] = []
+        texts: list[str | None] = []
         if state.exists:
             s0, q0, t0 = state.get
             sides, seqs, texts = list(s0), list(q0), list(t0)
@@ -63,7 +65,7 @@ def _make_stateful_kernel(normalization, cutoff, try_subseg, stale_ms: int):
                     continue
                 sides.append(int(side))
                 seqs.append(int(seq))
-                texts.append("" if text is None else str(text))
+                texts.append(text)
         if flush:
             if state.exists:
                 state.remove()
@@ -79,13 +81,7 @@ def _make_stateful_kernel(normalization, cutoff, try_subseg, stale_ms: int):
 
 
 def _emit(url, sides, seqs, texts, normalization, cutoff, try_subseg):
-    order = sorted(range(len(sides)), key=lambda k: (sides[k], seqs[k]))
-    l1 = [texts[k] for k in order if sides[k] == 1]
-    l2, line_nos = [], []
-    for k in order:
-        if sides[k] == 2 and texts[k] and texts[k].strip():
-            l2.append(texts[k])
-            line_nos.append(seqs[k])
+    l1, l2, line_nos = long_form_doc(sides, seqs, texts)
     rows = align_lists_rows(url, l1, l2, line_nos,
                             normalization, cutoff, try_subseg)
     return pd.DataFrame(rows, columns=_COLS)

@@ -96,28 +96,3 @@ def test_unmatched_short_lines_tolerated(spark, sf_small):
     out = align_pages(pages, normalization=DEFAULT_NORMALIZATION).collect()
     scores = [r.score for r in out if r.j >= 0]
     assert sum(scores) / len(scores) > 0.75
-
-
-def test_cogrouped_equals_segments_path(spark, sf_small):
-    """cogroup(two tables) == align_segments(one long table) == align_pages."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-    from nmalign_spark.functions.normalize import DEFAULT_NORMALIZATION
-    from nmalign_spark.operators.align import align_cogrouped, align_segments
-    from nmalign_spark.sources.pages import pages_from_documents
-    from nmalign_spark.sources.segments import segments_from_pages
-
-    pages = pages_from_documents(spark, sf_small).limit(40)
-    segs = segments_from_pages(pages).cache()
-    cand = segs.where(F.col("side") == 1).select("url", "seq_no", "seg_text")
-    refs = segs.where(F.col("side") == 2).select("url", "seq_no", "seg_text")
-
-    def canon(df):
-        pdf = df.toPandas()
-        return (pdf.sort_values(["url", "i"]).reset_index(drop=True)
-                .reindex(sorted(pdf.columns), axis=1))
-
-    a = canon(align_cogrouped(cand, refs,
-                              normalization=DEFAULT_NORMALIZATION))
-    b = canon(align_segments(segs, normalization=DEFAULT_NORMALIZATION))
-    pd.testing.assert_frame_equal(a, b)

@@ -86,6 +86,25 @@ def test_hash_index_self_heals_after_partial_commit(spark, sf_small,
         == first["n_kept"]
 
 
+def test_rules_reconcile_with_corpus_on_later_runs(spark, sf_small,
+                                                    tmp_path):
+    """_rules of a run after the first must count the verdict that chose
+    that run's corpus rows, not a recompute against the grown corpus."""
+    out = str(tmp_path / "cur")
+    docs = _docs(spark, sf_small)
+    CurationPipeline(out).run(spark, docs.where(F.col("doc_id") % 2 == 0),
+                              run_id="r1")
+    CurationPipeline(out).run(spark, docs.where(F.col("doc_id") % 2 == 1),
+                              run_id="r2")
+    rules = (spark.read.parquet(f"{out}/_rules")
+             .where(F.col("run_id") == "r2").collect())
+    assert len(rules) == 1
+    corpus = spark.read.parquet(f"{out}/corpus")
+    n_kept = corpus.where(F.col("run_id") == "r2").count()
+    assert n_kept > 0
+    assert rules[0]["n_judged"] - rules[0]["n_dropped"] == n_kept
+
+
 def test_read_failure_is_not_first_run(spark, sf_small, tmp_path):
     """A corrupt committed table must abort the run, not silently skip
     the resume anti-join and duplicate the corpus."""

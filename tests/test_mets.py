@@ -184,11 +184,11 @@ class TestAdversarial:
 class TestEndToEnd:
     def test_workspace_on_disk(self, spark, tmp_path):
         """Full OCR-D-shaped run: METS on disk -> binaryFile scan -> pairing
-        -> read hrefs -> PAGE-XML + plaintext extraction -> cogrouped
+        -> read hrefs -> PAGE-XML + plaintext extraction -> side-tagged
         alignment; the GT text must win byte-identically per line."""
         from pyspark.sql import functions as F
 
-        from nmalign_spark.operators.align import align_cogrouped
+        from nmalign_spark.operators.align import align_segments
         from nmalign_spark.sources.pagexml import (make_page_xml,
                                                    pagexml_segments_df)
 
@@ -220,21 +220,21 @@ class TestEndToEnd:
         ocr_xml = (ws / "OCR" / "p1.xml").read_bytes()
         cand = pagexml_segments_df(
             spark.createDataFrame([("P1", ocr_xml)], "url string, xml binary"),
-            side=1).select("url", "seq_no", "seg_text")
+            side=1).select("url", "side", "seq_no", "seg_text")
         # plaintext partners in sorted-href order, one line each
         # (ocrd/cli.py:209-215: each file's text, splitlines, concatenated)
         ref_rows = []
         seq = 0
         for href in row.other_hrefs.split(","):
             for line in (ws / href).read_text().splitlines():
-                ref_rows.append(("P1", seq, line))
+                ref_rows.append(("P1", 2, seq, line))
                 seq += 1
         ref = spark.createDataFrame(
-            ref_rows, "url string, seq_no int, seg_text string")
+            ref_rows, "url string, side int, seq_no int, seg_text string")
 
         norm = {"ſ": "s", "aͤ": "ä", "uͤ": "ü"}
-        out = align_cogrouped(cand, ref, normalization=norm,
-                              try_subseg=False).collect()
+        out = align_segments(cand.unionByName(ref), normalization=norm,
+                             try_subseg=False).collect()
         got = {r.i: (r.j, round(r.score, 3)) for r in out}
         assert {i: j for i, (j, _) in got.items()} == {0: 0, 1: 1, 2: 2}
         assert all(s == 1.0 for _, s in got.values())

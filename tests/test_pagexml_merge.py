@@ -1,6 +1,6 @@
 """PAGE-XML merge-back sink (reference ocrd/cli.py:240-290): TextEquiv
 insertion + renumbering, split suffixes, Word pruning, region re-roll, and
-the Spark merge path end-to-end through the real cogrouped aligner."""
+the Spark merge path end-to-end through the real aligner."""
 from __future__ import annotations
 
 from hypothesis import given, settings
@@ -147,10 +147,10 @@ class TestRoundtripProperty:
 
 class TestSparkMerge:
     def test_merge_pages_df_end_to_end(self, spark):
-        """XML pages -> segments -> real cogrouped aligner -> merge ->
+        """XML pages -> segments -> real align_segments -> merge ->
         parse back: index-0 unicode per line is the GT text byte-identically
         (the north-rule invariant on the OCR-D-shaped flow)."""
-        from nmalign_spark.operators.align import align_cogrouped
+        from nmalign_spark.operators.align import align_segments
         from nmalign_spark.sources.pagexml import pagexml_segments_df
 
         urls = [f"p{k}" for k in range(3)]
@@ -158,13 +158,13 @@ class TestSparkMerge:
             [(u, make_page_xml(OCR, junk_equiv=True).encode())
              for u in urls], "url string, xml binary")
         cand = pagexml_segments_df(pages, side=1) \
-            .select("url", "seq_no", "seg_text")
+            .select("url", "side", "seq_no", "seg_text")
         ref = spark.createDataFrame(
-            [(u, j, t) for u in urls for j, t in enumerate(GT)],
-            "url string, seq_no int, seg_text string")
+            [(u, 2, j, t) for u in urls for j, t in enumerate(GT)],
+            "url string, side int, seq_no int, seg_text string")
         norm = {"ſ": "s", "aͤ": "ä", "uͤ": "ü"}
-        aligned = align_cogrouped(cand, ref, normalization=norm,
-                                  try_subseg=False)
+        aligned = align_segments(cand.unionByName(ref), normalization=norm,
+                                 try_subseg=False)
         merged = merge_pages_df(pages, aligned, other_grp="OCR-D-GT")
         got = {r.url: r.xml for r in merged.collect()}
         assert set(got) == set(urls)
@@ -181,20 +181,20 @@ class TestSparkMerge:
         (cli.py:219-226) but surviving lines keep their pre-filter
         line%04d ids (assigned at cli.py:213-215): after the blank at
         original position 1, filtered j=1 must surface as line0002."""
-        from nmalign_spark.operators.align import align_cogrouped
+        from nmalign_spark.operators.align import align_segments
         from nmalign_spark.sources.pagexml import pagexml_segments_df
 
         gt_with_blank = [GT[0], "   ", GT[1], GT[2]]
         pages = spark.createDataFrame(
             [("p0", make_page_xml(OCR).encode())], "url string, xml binary")
         cand = pagexml_segments_df(pages, side=1) \
-            .select("url", "seq_no", "seg_text")
+            .select("url", "side", "seq_no", "seg_text")
         ref = spark.createDataFrame(
-            [("p0", j, t) for j, t in enumerate(gt_with_blank)],
-            "url string, seq_no int, seg_text string")
+            [("p0", 2, j, t) for j, t in enumerate(gt_with_blank)],
+            "url string, side int, seq_no int, seg_text string")
         norm = {"ſ": "s", "aͤ": "ä", "uͤ": "ü"}
-        aligned = align_cogrouped(cand, ref, normalization=norm,
-                                  try_subseg=False)
+        aligned = align_segments(cand.unionByName(ref), normalization=norm,
+                                 try_subseg=False)
         merged = merge_pages_df(pages, aligned, other_grp="GT")
         xml = merged.collect()[0].xml
         equivs = by_line(parse_line_equivs(xml))

@@ -18,6 +18,8 @@ SIDE2 = {
     "u2": ["erste Zeile", "zweite Zeile"],
 }
 NORM = {"ſ": "s"}
+# a null side-1 text: both paths read it as "" (one long-form helper)
+NULL_ROW = ("u2", 1, len(SIDE1["u2"]), None)
 
 
 @pytest.fixture(scope="module")
@@ -30,6 +32,7 @@ def split_src(tmp_path_factory):
     spark = SparkSession.getActiveSession() or SparkSession.builder.getOrCreate()
     schema = "url string, side int, seq_no int, seg_text string"
     a = [(u, 1, i, s) for u in URLS for i, s in enumerate(SIDE1[u])]
+    a.append(NULL_ROW)
     b = [(u, 2, i, s) for u in URLS for i, s in enumerate(SIDE2[u])]
     b += [(u, 0, -1, None) for u in URLS]       # flush markers
     spark.createDataFrame(a, schema).coalesce(1) \
@@ -61,9 +64,12 @@ def test_stateful_stream_equals_batch(spark, split_src, tmp_path):
     schema = "url string, side int, seq_no int, seg_text string"
     rows = [(u, 1, i, s) for u in URLS for i, s in enumerate(SIDE1[u])]
     rows += [(u, 2, i, s) for u in URLS for i, s in enumerate(SIDE2[u])]
+    rows.append(NULL_ROW)
     want = align_segments(spark.createDataFrame(rows, schema),
                           normalization=NORM).toPandas()
     assert _canon(got) == _canon(want)
-    # every segment matched its reference line exactly after normalization
-    assert (got.sort_values(["url", "i"])["extracted"].tolist()
-            == [s for u in URLS for s in SIDE2[u]])
+    # the null text came out as "" on both paths; every other segment
+    # matched its reference line exactly after normalization
+    assert (got["seg_text"] == "").sum() == 1
+    real = got[got["seg_text"] != ""].sort_values(["url", "i"])
+    assert real["extracted"].tolist() == [s for u in URLS for s in SIDE2[u]]
